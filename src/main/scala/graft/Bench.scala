@@ -277,10 +277,65 @@ object Bench {
     "q212_generation_history", "q213_streamed_refresh",
     "q214_lifecycle_fsck", "q215_fsck_repair")
 
+  /** A timed query set in run order: (median, min) seconds per query,
+    * `None` for a query that threw — a failure is never timed.
+    */
+  private[graft] final case class Timings(
+      results: Seq[(String, Option[(Double, Double)])]) {
+    def failed: Seq[String] = results.collect { case (name, None) => name }
+    /** Sum of the medians of the queries that ran. */
+    def total: Double = results.flatMap(_._2).map(_._1).sum
+  }
+
+  /** `runsPerQuery` timed runs of each query (median and min kept). A
+    * query that throws is reported on stderr and not run again.
+    */
+  private[graft] def timeQueries(spark: SparkSession, sfDir: String,
+      qs: Seq[(String, (SparkSession, String) => DataFrame)],
+      runsPerQuery: Int): Timings = Timings(qs.map { case (name, fn) =>
+    def run(): Option[Double] = {
+      // drop cached frames so a query that caches an intermediate
+      // (q71's hourly aggregate) measures END-TO-END like every other
+      // query — the warmup pass otherwise pins the cache and all three
+      // timed runs read it (ADVICE r8); rebuilding inside the timed
+      // window keeps numbers comparable while the cache still serves
+      // its in-query purpose (two branches share one build)
+      spark.catalog.clearCache()
+      // ... and drop leftover localCheckpoint storage: eager-result
+      // operators (PageRank, triangles, k-core, cusum, q95's stage
+      // hand-offs) persist their result RDDs OUTSIDE the cacheManager,
+      // so clearCache never touches them and they accumulate across
+      // the suite — at 175 queries the block manager filled far enough
+      // that q138's write-audit measured 137 s in-suite vs 9.8 s
+      // standalone under the identical session config. Nothing
+      // references a prior query's checkpoint, so dropping storage is
+      // safe (and lineage-truncated RDDs are never recomputed because
+      // nothing asks for them again).
+      spark.sparkContext.getPersistentRDDs.values
+        .foreach(_.unpersist(blocking = false))
+      // collect OUTSIDE the timed window: on a large heap a major GC
+      // pause otherwise lands mid-query on whichever one draws the
+      // short straw, spiking a random per-query number 3-4x
+      System.gc()
+      val t0 = System.nanoTime()
+      try {
+        forceEval(fn(spark, sfDir))
+        Some((System.nanoTime() - t0) / 1e9)
+      } catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+          None
+      }
+    }
+    val times = Iterator.continually(run()).take(runsPerQuery)
+      .takeWhile(_.isDefined).flatten.toVector.sorted
+    name -> Option.when(times.length == runsPerQuery)(
+      (times(times.length / 2), times.head))
+  })
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     // optional subset filter for iterating on specific queries
     // (comma-separated short ids or full names, e.g. "q151,q155");
@@ -328,54 +383,22 @@ object Bench {
     require(runsPerQuery >= 1,
       s"SPARK_GRAFT_BENCH_RUNS must be >= 1, got $runsPerQuery — 0 would " +
         "crash on the median index after the full warmup pass")
-    def timeQueries(qs: Seq[(String, (SparkSession, String) => DataFrame)]) =
-      qs.map { case (name, fn) =>
-      val times = (1 to runsPerQuery).map { _ =>
-        // drop cached frames so a query that caches an intermediate
-        // (q71's hourly aggregate) measures END-TO-END like every other
-        // query — the warmup pass otherwise pins the cache and all three
-        // timed runs read it (ADVICE r8); rebuilding inside the timed
-        // window keeps numbers comparable while the cache still serves
-        // its in-query purpose (two branches share one build)
-        spark.catalog.clearCache()
-        // ... and drop leftover localCheckpoint storage: eager-result
-        // operators (PageRank, triangles, k-core, cusum, q95's stage
-        // hand-offs) persist their result RDDs OUTSIDE the cacheManager,
-        // so clearCache never touches them and they accumulate across
-        // the suite — at 175 queries the block manager filled far enough
-        // that q138's write-audit measured 137 s in-suite vs 9.8 s
-        // standalone under the identical session config. Nothing
-        // references a prior query's checkpoint, so dropping storage is
-        // safe (and lineage-truncated RDDs are never recomputed because
-        // nothing asks for them again).
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        // collect OUTSIDE the timed window: on a large heap a major GC
-        // pause otherwise lands mid-query on whichever one draws the
-        // short straw, spiking a random per-query number 3-4x
-        System.gc()
-        val t0 = System.nanoTime()
-        try forceEval(fn(spark, sfDir)) catch {
-          case e: Throwable =>
-            // a swallowed failure shows up as a suspiciously fast
-            // "result" — make it loud, keeping the one-line JSON contract
-            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-        }
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      name -> (times(times.length / 2), times.head)
-    }
-    val pureResults = timeQueries(pureQueries)
+    val pureTimings = timeQueries(spark, sfDir, pureQueries, runsPerQuery)
     // the lifecycle phase: warmup AND timed runs both after every pure
     // number is in the bag
     warmup(lcQueries)
-    val results = pureResults ++ timeQueries(lcQueries)
+    val timings = Timings(pureTimings.results ++
+      timeQueries(spark, sfDir, lcQueries, runsPerQuery).results)
+    val results = timings.results
     // Double.toString is locale-independent (%.4f is not)
     def r4(v: Double): String = (math.rint(v * 10000) / 10000).toString
+    // a failed query reads null, never a time
     def jmap(key: String => String, sel: ((Double, Double)) => Double) = results
-      .map { case (k, v) => "\"" + key(k) + "\":" + r4(sel(v)) }
+      .map { case (k, v) => "\"" + key(k) + "\":" + v.fold("null")(t => r4(sel(t))) }
       .mkString("{", ",", "}")
-    val total = results.map(_._2._1).sum
+    val total = timings.total
+    def failedJson(key: String => String) =
+      timings.failed.map(k => "\"" + key(k) + "\"").mkString("[", ",", "]")
     // build/query phase decomposition for q108/q114 — printed BEFORE the
     // machine-read line so that line stays last in the driver's window
     // subset runs compute phase splits only for the selected queries
@@ -398,7 +421,7 @@ object Bench {
       "\"" + k + "\":\"" +
         (if (LifecyclePhase(k)) "lifecycle" else "query") + "\""
     }.mkString("{", ",", "}")
-    val detailLine = s"""{"metric":"total_detail","value":${r4(total)},"unit":"sec","runs_per_query":$runsPerQuery,"basis_factor":${r4(basisFactor)},"controls_min":$controlsJson,"phase_detail":$phaseJson,"phase_of":$phaseOfJson,"queries_min":${jmap(identity, _._2)},"queries":${jmap(identity, _._1)},"sf":"$sfDir"}"""
+    val detailLine = s"""{"metric":"total_detail","value":${r4(total)},"unit":"sec","runs_per_query":$runsPerQuery,"basis_factor":${r4(basisFactor)},"failed":${failedJson(identity)},"controls_min":$controlsJson,"phase_detail":$phaseJson,"phase_of":$phaseOfJson,"queries_min":${jmap(identity, _._2)},"queries":${jmap(identity, _._1)},"sf":"$sfDir"}"""
     println(detailLine)
     // full resolution also lands in the repo: the stdout tail window
     // truncates, this file never does. Path is cwd-relative (or
@@ -422,22 +445,25 @@ object Bench {
     def rp(p: Int)(v: Double): String = {
       val m = math.pow(10, p); (math.rint(v * m) / m).toString
     }
-    def shortLine(qs: Seq[(String, Double)], p: Int): String = {
-      val q = qs.map { case (k, v) => "\"" + k.split('_').head + "\":" + rp(p)(v) }
+    def shortId(name: String): String = name.split('_').head
+    def shortLine(qs: Seq[(String, Option[Double])], p: Int): String = {
+      val q = qs.map { case (k, v) => "\"" + shortId(k) + "\":" + v.fold("null")(rp(p)) }
         .mkString("{", ",", "}")
-      s"""{"metric":"total","value":${r4(total)},"unit":"sec","runs_per_query":$runsPerQuery,"basis_factor":${r4(basisFactor)},"queries":$q,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${r4(total)},"unit":"sec","runs_per_query":$runsPerQuery,"basis_factor":${r4(basisFactor)},"failed":${failedJson(shortId)},"queries":$q,"sf":"$sfDir"}"""
     }
-    val meds = results.toSeq.map { case (k, v) => (k, v._1) }
+    val meds = results.map { case (k, v) => (k, v.map(_._1)) }
     val budget = 1900 // headroom inside the 2000-char capture window
     val fitted = (3 to 1 by -1).iterator.map(p => shortLine(meds, p))
       .find(_.length <= budget)
       .getOrElse {
-        val bySlow = meds.sortBy(-_._2)
+        // failed queries sort first: they are also named in `failed`
+        val bySlow = meds.sortBy(m => -m._2.getOrElse(Double.PositiveInfinity))
         (meds.length to 1 by -1).iterator
           .map(n => shortLine(bySlow.take(n).sortBy(_._1), 1))
           .find(_.length <= budget).get
       }
     println(fitted)
     spark.stop()
+    if (timings.failed.nonEmpty) sys.exit(1)
   }
 }

@@ -15,9 +15,13 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  /** Local session sized for the test harness (local[N] single JVM). */
-  def local(cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt): SparkSession =
+  /** The `Verify` and `Bench` session: `local[N]` with one shuffle
+    * partition per core, N from `SPARK_GRAFT_CPUS` (4 when unset).
+    */
+  def local(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     builder(s"local[$cpus]", shufflePartitions = cpus).getOrCreate()
+  }
 
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession

@@ -1,13 +1,13 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Serving-query layer (SURVEY.md §2.10 Q1–Q9): the API's Trino SQL
   * re-hosted as Spark over the gold tables. Each method is one query
   * shape; the metric/order whitelists mirror the reference's sanitization
   * (`trino_client.py:112-139`, `:323-364`) so arbitrary column injection
-  * is impossible. Registered views let the same surface be `spark.sql`'d.
+  * is impossible.
   */
 object Serving {
 
@@ -18,9 +18,6 @@ object Serving {
   val TopKMetrics: Set[String] =
     Set("followers_count", "total_views", "total_likes", "trust_score",
       "avg_engagement_rate")
-
-  def registerViews(spark: SparkSession, tables: Map[String, DataFrame]): Unit =
-    tables.foreach { case (name, df) => df.createOrReplaceTempView(name) }
 
   /** Q1: filtered, ordered, paginated listing. */
   def listKols(dimKol: DataFrame, platform: Option[String], orderBy: String,
@@ -55,15 +52,6 @@ object Serving {
       sum("followers_count").as("total_followers"),
       round(avg("followers_count"), 2).as("avg_followers"),
       sum(when(col("verified"), 1L).otherwise(0L)).as("verified_count"))
-
-  /** Q5: per-platform breakdown ordered by KOL count. */
-  def platformBreakdown(dimKol: DataFrame): DataFrame =
-    dimKol.groupBy("platform")
-      .agg(count(lit(1)).as("kol_count"),
-        sum("followers_count").as("total_followers"),
-        round(avg("followers_count"), 2).as("avg_followers"),
-        max("followers_count").as("max_followers"))
-      .orderBy(col("kol_count").desc, col("platform").asc)
 
   /** Q6: top-k by whitelisted metric. */
   def topK(dimKol: DataFrame, metric: String, k: Int): DataFrame = {

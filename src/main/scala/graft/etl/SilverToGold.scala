@@ -1,12 +1,12 @@
 package graft.etl
 
 import graft.functions.Scores
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Silver → Gold star schema (SURVEY.md §3.2 step 3, `silver_to_gold.py`).
   *
-  * Dimensions (static platform/content-type dims, derived dim_time),
+  * The derived dim_time dimension,
   * dim_kol via left joins onto trust + engagement (J1/J2) with
   * absent-side defaults (J4), the trust heuristic + tier binning (U4),
   * the fact table with FK resolution via when-chains — kept as the
@@ -15,28 +15,6 @@ import org.apache.spark.sql.functions._
   * dimension lookup at any scale.
   */
 object SilverToGold {
-
-  /** Static platform dimension (`silver_to_gold.py:280-291`, S9). */
-  def dimPlatform(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1, "tiktok", "short_video"),
-      (2, "youtube", "video"),
-      (3, "instagram", "photo_video"),
-      (4, "facebook", "social"),
-      (5, "twitter", "microblog"))
-      .toDF("platform_id", "platform_name", "platform_category")
-  }
-
-  /** Static content-type dimension (`silver_to_gold.py:370-381`). */
-  def dimContentType(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq(
-      (1, "video", "short-form video"),
-      (2, "livestream", "live broadcast"),
-      (3, "post", "static post"))
-      .toDF("content_type_id", "content_type_name", "description")
-  }
 
   /** dim_time derived from the span of observed dates
     * (`silver_to_gold.py:318-343`): full P19 date kit, weekend flag via

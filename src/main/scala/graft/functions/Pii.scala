@@ -30,10 +30,6 @@ object Pii {
   def ssnCount(text: Column): Column = regexp_count(text, lit(SsnRe))
   def ipv4Count(text: Column): Column = regexp_count(text, lit(Ipv4Re))
 
-  /** Total PII hits across the four categories. */
-  def piiCount(text: Column): Column =
-    emailCount(text) + phoneCount(text) + ssnCount(text) + ipv4Count(text)
-
   /** `text` with every email/phone/SSN/IPv4 occurrence replaced by a
     * typed placeholder — the scrubbing pass a corpus runs before
     * training.

@@ -29,15 +29,6 @@ object VectorFunctions {
     when(denom > 0, dot(a, b) / denom).otherwise(lit(0.0))
   }
 
-  /** Euclidean distance. */
-  def l2Distance(a: Column, b: Column): Column =
-    sqrt(aggregate(
-      zip_with(a, b, (x, y) => {
-        val d = x.cast("double") - y.cast("double")
-        d * d
-      }),
-      lit(0.0), (acc, x) => acc + x))
-
   /** Deterministic random-hyperplane weights, derived ONCE at plan-build
     * time (not per row — the per-row xxhash64-of-string-concat form cost
     * dim×nPlanes hashes per row inside interpreted lambdas). Weights are

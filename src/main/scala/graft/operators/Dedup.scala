@@ -123,24 +123,7 @@ object Dedup {
     * (block, id_a, id_b, n_a, n_b, n_shared, jaccard), id_a < id_b.
     */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
-      blockCol: String, w: Int = 3, maxShingleDf: Long = 1000): DataFrame =
-    ngramJaccardPairsImpl(df, idCol, textCol, blockCol, w, maxShingleDf,
-      windowCap = true)
-
-  /** Measurement twin of [[ngramJaccardPairs]] with the df cap as
-    * `groupBy.count` + join instead of count-over-window — kept
-    * package-private for the cap-shape rehearsal (PERF_NOTES r9), not a
-    * query path. See the adjudication note inside the impl.
-    */
-  private[graft] def ngramJaccardPairsGroupCap(df: DataFrame, idCol: String,
-      textCol: String, blockCol: String, w: Int = 3,
-      maxShingleDf: Long = 1000): DataFrame =
-    ngramJaccardPairsImpl(df, idCol, textCol, blockCol, w, maxShingleDf,
-      windowCap = false)
-
-  private def ngramJaccardPairsImpl(df: DataFrame, idCol: String,
-      textCol: String, blockCol: String, w: Int, maxShingleDf: Long,
-      windowCap: Boolean): DataFrame = {
+      blockCol: String, w: Int = 3, maxShingleDf: Long = 1000): DataFrame = {
     // ONE exchange on (block, shingle) serves the whole index build: a
     // HashPartitioning on a SUBSET of an aggregate's grouping keys
     // satisfies its ClusteredDistribution, so the per-doc distinct, the
@@ -162,24 +145,16 @@ object Dedup {
     // gets map-side partials but plans the df table as a separate
     // aggregation whose probe join re-shuffles the full postings a
     // second time. Measured on the planted every-doc-shares-a-shingle
-    // corpus (quiet machine, timed3): window 3.78/10.33/25.31 s vs
+    // corpus (quiet machine, median of 3): window 3.78/10.33/25.31 s vs
     // groupBy+join 9.20/17.01/41.51 s at 50k/150k/450k docs — the
     // window wins 1.6–2.4× at every rung, so it stays at every cap
     // site. The hot key's bounded count-and-drop serialization is far
     // cheaper than a second postings exchange.
     val dfw = Window.partitionBy("block", "shingle")
-    val kept = if (windowCap) {
-      postings
-        .withColumn("df_", count(lit(1)).over(dfw))
-        .filter(col("df_") <= maxShingleDf)
-        .drop("df_")
-    } else {
-      val dfs = postings.groupBy("block", "shingle")
-        .agg(count(lit(1)).as("df_"))
-        .filter(col("df_") <= maxShingleDf)
-        .select("block", "shingle")
-      postings.join(dfs, Seq("block", "shingle"))
-    }
+    val kept = postings
+      .withColumn("df_", count(lit(1)).over(dfw))
+      .filter(col("df_") <= maxShingleDf)
+      .drop("df_")
     val a = kept.as("a")
     val b = kept.as("b")
     val shared = a.join(b,
@@ -347,24 +322,6 @@ object Dedup {
     def permuteSql(e: String, i: Int): String =
       s"((${aCoef(i)}::BIGINT * $e + ${bCoef(i)}::BIGINT) % ${P}::BIGINT)"
   }
-
-  /** MinHash signature of a shingle array — the SAME two-level family as
-    * [[minhashSignatures]] (h_i(s) = xxhash64_seeded(xxhash64(s), i)), so
-    * scalar and bulk signatures are interchangeable (e.g. scalar signatures
-    * can be banded against [[minhashCandidates]] output). Computed without
-    * leaving codegen'd builtins. (True per-permutation seeds: the
-    * `functions.xxhash64` varargs form hashes extra args under the default
-    * seed instead of seeding — see GraftSqlBridge.xxhash64Seeded.)
-    *
-    * NOTE: as a nested higher-order expression this re-evaluates
-    * `shinglesCol` once per permutation when Catalyst collapses
-    * projections — fine for ad-hoc column use, but bulk signatures must
-    * go through [[minhashSignatures]] (hash-once explode+aggregate).
-    */
-  def minhashSignature(shinglesCol: Column, perms: Int): Column =
-    array((0 until perms).map(seed =>
-      array_min(transform(shinglesCol,
-        sh => org.apache.spark.sql.GraftSqlBridge.xxhash64Seeded(xxhash64(sh), seed)))): _*)
 
   /** Bulk MinHash: (id, sig), default path — the native one-pass
     * [[graft.plans.MinHashSig]] kernel: tokenize → shingle → hash → fold
@@ -852,17 +809,17 @@ object Dedup {
     * measures faster through 16M docs — 3.47/9.39/30.81 s vs this
     * shape's 4.88/14.63/39.91 s at 1M/4M/16M — because sorting 8M
     * digest-only postings in one task costs low single-digit seconds
-    * while this shape pays the winners join back. The decision-stage-
-    * only ladder (--segdigest-only: synthetic postings, no text, rungs
-    * to 128M docs) finds where that stops: windowed 1.51 s vs grouped
+    * while this shape pays the winners join back. A decision-stage-
+    * only ladder (synthetic postings, no text, rungs to 128M docs)
+    * finds where that stops: windowed 1.51 s vs grouped
     * 1.77 s at 16M, then **4.19 vs 10.79 s at 64M (grouped 2.6×
     * ahead)** and 10.65 vs 12.10 s at 128M — the hot partition's
     * single-task sort (32M/64M postings of one digest) finally
     * dominates between 16M and 64M docs. At 100 TB (~10⁹ postings on a
     * ubiquitous segment) the window serializes for minutes; this
     * shape's per-task work stays bounded by construction.
-    * [[segmentDedupWindowed]] remains for corpora known to be free of
-    * mega-df segments at sub-crossover scale.
+    * [[segmentDedupWindowed]] keeps the window shape as the spec's
+    * reference.
     */
   private def firstPosting(posts: DataFrame): DataFrame = {
     import org.apache.spark.sql.types._
@@ -885,27 +842,10 @@ object Dedup {
     }
   }
 
-  /** Rehearsal-only handles on the two keep-first DECISION shapes, minus
-    * segmentation and reassembly: the shapes differ only here, so the
-    * crossover hunt ([[graft.ScaleRehearsal]] --segdigest-only) feeds
-    * synthetic postings straight in and rungs reach 128M docs without
-    * paying text generation. Not query paths.
-    */
-  private[graft] def firstPostingGrouped(posts: DataFrame): DataFrame =
-    firstPosting(posts)
-  private[graft] def firstPostingWindowed(posts: DataFrame): DataFrame =
-    posts.withColumn("__rn", row_number().over(
-        Window.partitionBy("__h").orderBy(col("__id"), col("__idx"))))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
-
-  /** REJECTED round-8 shape of [[segmentDedup]]'s keep-first rule, kept
-    * package-private and unused by any query so the hot-segment
-    * rehearsal ladder can measure the single-task sort the operator was
-    * rewritten to avoid (see [[firstPosting]] — including the honest
-    * finding that THIS shape is ~25–30% faster at rehearsal scale and
-    * loses only beyond it, where the hot partition serializes). Not a
-    * query path.
+  /** The round-8 `row_number` window shape of [[segmentDedup]]'s
+    * keep-first rule: the reference for the keep-first spec, which
+    * checks [[segmentDedup]] against it row for row. Not a query path
+    * (see [[firstPosting]] for why the window was replaced).
     */
   private[graft] def segmentDedupWindowed(df: DataFrame, idCol: String,
       textCol: String, width: Int): DataFrame = {

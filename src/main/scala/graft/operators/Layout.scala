@@ -161,14 +161,4 @@ object Layout {
     steps += s"h_key AS (SELECT $carryList$interleave AS hkey FROM h_fin)"
     steps.mkString(",\n")
   }
-
-  /** [[clusterByZOrder]] on the n-D Hilbert key. */
-  def clusterByHilbert(df: DataFrame, coords: Seq[Column], nFiles: Int,
-      bits: Int): DataFrame = {
-    require(nFiles > 0, s"nFiles must be positive, got $nFiles")
-    df.withColumn("__hkey", hilbertKey(coords, bits))
-      .repartitionByRange(nFiles, col("__hkey"))
-      .sortWithinPartitions("__hkey")
-      .drop("__hkey")
-  }
 }

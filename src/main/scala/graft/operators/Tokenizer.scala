@@ -149,8 +149,8 @@ object Tokenizer {
     * truncation also keeps plan depth constant over thousands of
     * rounds. The trade: ~4 small Spark jobs per round of fixed
     * overhead, so BELOW a few hundred thousand distinct words the
-    * recount path's single shuffle per round is cheaper — the ladder
-    * locates the crossover ([[graft.ScaleRehearsal]] --bpedelta-only).
+    * recount path's single shuffle per round is cheaper (PERF_NOTES,
+    * "Round 11: BPE delta-vs-recount").
     *
     * Output and semantics are [[bpeMergeTable]]'s, merge-for-merge
     * (spec-pinned: same pairs, same frequencies, same trajectory).

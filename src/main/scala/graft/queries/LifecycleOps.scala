@@ -530,7 +530,7 @@ object LifecycleOps {
     * exchange. Row set is identical: losers are exactly the rows the
     * window gave __rn > 1.
     */
-  private[graft] def packStageChain(art: DataFrame): (DataFrame, Column, Column) = {
+  private def packStageChain(art: DataFrame): (DataFrame, Column, Column) = {
     val losers = art.select(col("fp"), col("doc_id"))
       .withColumn("__rn", row_number().over(
         org.apache.spark.sql.expressions.Window

@@ -24,11 +24,28 @@ object Sinks {
   final class KeyValueTopK extends Serializable {
     val store: TrieMap[String, Map[String, String]] = TrieMap.empty
     val ranking: TrieMap[String, Double] = TrieMap.empty
+    /** Window start (epoch ms) of the row held in `store`, per store key,
+      * for writers that upsert through [[upsertWindow]].
+      */
+    val storedWindow: TrieMap[String, Long] = TrieMap.empty
 
     def upsert(platform: String, key: String, fields: Map[String, String],
         score: Double): Unit = {
       store.put(s"trending:$platform:$key", fields)
       ranking.put(s"$platform:$key", score)
+    }
+
+    /** [[upsert]] unless the key already holds a newer window: an
+      * update for an older window is skipped, one for the same or a
+      * newer window wins.
+      */
+    def upsertWindow(platform: String, key: String, windowStartMs: Long,
+        fields: Map[String, String], score: Double): Unit = {
+      val storeKey = s"trending:$platform:$key"
+      if (storedWindow.get(storeKey).forall(_ <= windowStartMs)) {
+        storedWindow.put(storeKey, windowStartMs)
+        upsert(platform, key, fields, score)
+      }
     }
 
     def topK(platform: String, k: Int): Seq[(String, Double)] =
@@ -38,8 +55,12 @@ object Sinks {
         .take(k)
   }
 
-  /** foreachBatch writer: upsert every row of the scored trending frame
-    * into the KV/top-k view (update output mode → last window state wins).
+  /** foreachBatch writer: upsert the scored trending frame into the
+    * KV/top-k view, so each key holds the latest state of its NEWEST
+    * window. Update mode emits one row per changed (key, window), and a
+    * key's sliding windows arrive in any row order, so the collected
+    * rows are applied in ascending window order after the collect and
+    * an update for a window older than the stored one is skipped.
     */
   def trendingKvSink(df: DataFrame, kv: KeyValueTopK,
       checkpoint: Option[String] = None,
@@ -49,14 +70,15 @@ object Sinks {
       .outputMode("update")
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val rows = batch.select(
+        val rows = batch.select(col("window_start"),
           col("platform"), col("username"), col("trending_score"),
           col("trending_label"), col("total_engagement"), col("event_count"))
           .collect() // bounded: one row per (key, window) in the micro-batch
-        rows.foreach { r =>
-          kv.upsert(
+        rows.sortBy(_.getTimestamp(0).getTime).foreach { r =>
+          kv.upsertWindow(
             r.getAs[String]("platform"),
             r.getAs[String]("username"),
+            r.getTimestamp(0).getTime,
             Map(
               "trending_score" -> r.getAs[Double]("trending_score").toString,
               "trending_label" -> r.getAs[String]("trending_label"),
@@ -108,10 +130,4 @@ object Sinks {
   def consoleSink(df: DataFrame): DataStreamWriter[Row] =
     df.writeStream.outputMode("update").format("console")
       .option("truncate", "false")
-
-  /** In-engine top-k view over a batch/gold frame — replaces the
-    * reference's Redis ZREVRANGE read path (O3) with a plain Spark query.
-    */
-  def topKView(df: DataFrame, metricCol: String, k: Int, tieBreak: String): DataFrame =
-    df.orderBy(col(metricCol).desc, col(tieBreak).asc).limit(k)
 }

@@ -21,8 +21,10 @@ class AsofJoinSpec extends SparkSpec {
   ).toDF("key", "t", "v")
 
   test("mid-series, inclusive bound, no-match null, key isolation") {
-    val out = AsofJoin.asofJoin(probe, "key", "t", build, "key", "t", Seq("v"))
-      .collect().map(r => r.getLong(0) -> Option(r.getString(3))).toMap
+    val rows = AsofJoin.asofJoin(probe, "key", "t", build, "key", "t", Seq("v"))
+      .collect()
+    assert(rows.length == 6, s"one output row per probe row, got ${rows.length}")
+    val out = rows.map(r => r.getLong(0) -> Option(r.getString(3))).toMap
     assert(out(1L) == Some("a"))   // t=5: latest build ≤ 5 is (4,"a")
     assert(out(2L) == Some("b"))   // t=10: INCLUSIVE tie matches (10,"b")
     assert(out(3L) == Some("c"))   // t=20: after the last build row

@@ -364,6 +364,14 @@ class CurationSpec extends SparkSpec {
     val offs = kept.select("id", "offset").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(offs == Map(1L -> 0L, 3L -> 5L, 4L -> 0L, 6L -> 0L), s"got $offs")
+    // the kept set of the plain per-source running-sum window, which
+    // sorts a whole source in one task (the shape the two phases avoid)
+    val run = Window.partitionBy("source").orderBy(col("score").desc, col("id"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val naive = docs.withColumn("cum", sum(col("nt")).over(run))
+      .join(plan, "source").filter(col("cum") <= col("target_tokens"))
+      .select("id").collect().map(_.getLong(0)).toSet
+    assert(naive == ids, s"running-sum window kept $naive")
     // partitioning invariance: the two-phase prefix sum is layout-free
     val ids2 = Sampling.mixtureTake(docs.repartition(7), "source", "id",
         "nt", "score", plan)

@@ -238,6 +238,22 @@ class StreamingDedupSpec extends SparkSpec {
     assert(e.getMessage.contains("renumbered"), e.getMessage)
   }
 
+  test("compactSegmentIndex folds closed batches; screening is unchanged") {
+    import sqlImplicits._
+    val dir = java.nio.file.Files.createTempDirectory("sdedup_segcmp")
+      .toFile.getAbsolutePath + "/segindex"
+    Seq((1L, "a b c d e f"), (2L, "x y z a b c")).zipWithIndex.foreach {
+      case (doc, i) => StreamingDedup.screenSegmentsBatch(Seq(doc)
+        .toDF("doc_id", "text"), i.toLong, "doc_id", "text", dir, width = 3).collect()
+    }
+    assert(StreamingDedup.compactSegmentIndex(spark, dir, upToBatch = 2,
+      targetPartitions = 1) == 2L)
+    val b2 = Seq((3L, "d e f g h i x y z")).toDF("doc_id", "text")
+    val got = StreamingDedup.screenSegmentsBatch(b2, 2L, "doc_id", "text", dir, width = 3)
+      .collect().map(r => (r.getLong(0), r.getAs[String]("kept_text"))).toSet
+    assert(got == Set((3L, "g h i")), s"screen after compaction: $got")
+  }
+
   test("screenAndIndexBatch re-run of the same batch id is idempotent") {
     import sqlImplicits._
     val dir = java.nio.file.Files.createTempDirectory("sdedup_idem")

@@ -195,6 +195,31 @@ class StreamingSpec extends SparkSpec {
       assert(kv.store.contains("trending:tiktok:kol_low"))
       val hot = kv.store("trending:tiktok:kol_hot")
       assert(hot("trending_label") == "Viral" || hot("trending_label") == "Hot")
+      // a key's newer windows (starts 09:59-10:03) in one batch, its older
+      // ones (starts 09:56-10:00, two shared) in the next: the KV keeps the
+      // final row of the newest window, whatever the row order
+      source.addData(KafkaLike(videoJson("kol_r", "tiktok", 50, 0, 0, 100, "r1"), ts("2024-01-01 10:03:00")))
+      q.processAllAvailable()
+      val newest = kv.store("trending:tiktok:kol_r")
+      assert(newest("event_count") == "1" && newest("total_engagement") == "50", newest)
+      source.addData(KafkaLike(videoJson("kol_r", "tiktok", 7, 0, 0, 100, "r2"), ts("2024-01-01 10:00:30")))
+      q.processAllAvailable()
+      assert(kv.store("trending:tiktok:kol_r") == newest,
+        s"an older window overwrote the newest: ${kv.store("trending:tiktok:kol_r")}")
+      assert(kv.storedWindow("trending:tiktok:kol_r") == ts("2024-01-01 10:03:00").getTime)
+    } finally q.stop()
+  }
+
+  test("K7 console sink: update-mode debug output of the trending frame") {
+    implicit val ctx = spark.sqlContext
+    val source = MemoryStream[KafkaLike]
+    val q = Sinks.consoleSink(TrendingStream.pipeline(source.toDF()))
+      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L)).start()
+    try {
+      source.addData(KafkaLike(videoJson("kol_c", "tiktok", 9, 1, 0, 50, "c1"), ts("2024-01-01 10:00:30")))
+      q.processAllAvailable()
+      assert(q.exception.isEmpty)
+      assert(q.recentProgress.map(_.numInputRows).sum == 1L)
     } finally q.stop()
   }
 
